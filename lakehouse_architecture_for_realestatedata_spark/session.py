@@ -86,6 +86,31 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
 }
 
+#: The directory holding this package — what a Python worker needs on its
+#: path to import it.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _session_conf(
+    master: str, shuffle_partitions: int, extra_conf: dict[str, str] | None
+) -> dict[str, str]:
+    """The confs ``get_spark`` builds with: the defaults, the sizing, and
+    the caller's ``extra_conf`` last (it wins over everything)."""
+    conf = dict(_DEFAULT_CONF)
+    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if master.startswith("local"):
+        # Local mode: the driver JVM is the only memory pool.
+        conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+    # Python workers unpickle this package's functions (every mapInArrow /
+    # pandas kernel), so they must import it whatever the caller's working
+    # directory: put the package's parent directory first on their path,
+    # keeping the caller's PYTHONPATH after it.
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p
+    )
+    conf.update(extra_conf or {})
+    return conf
+
 
 def get_spark(
     app_name: str = "lakehouse_architecture_for_realestatedata_spark",
@@ -107,13 +132,7 @@ def get_spark(
         shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
 
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULT_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if master.startswith("local"):
-        # Local mode: the driver JVM is the only memory pool.
-        conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-    if extra_conf:
-        conf.update(extra_conf)
+    conf = _session_conf(master, shuffle_partitions, extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -1224,7 +1224,7 @@ def delta_read(
     df = (
         _scan_files_rowids(spark, path, snap, active)
         if with_row_ids
-        else _scan_files(spark, path, snap, active)
+        else _scan_files(spark, path, snap, active, where)
     )
     if where:
         from lakehouse_architecture_for_realestatedata_spark.sources.tables import (
@@ -1593,14 +1593,48 @@ def _scan_to_logical(df: DataFrame, snap: _Snapshot) -> DataFrame:
     )
 
 
+def _physical_conds_filter(snap: _Snapshot, conds: list[tuple] | None):
+    """The ``(col, op, value)`` conditions (LOGICAL names) that name
+    top-level DATA columns, as one filter over a PHYSICAL-named scan —
+    the selective step a DV'd scan runs BEFORE its per-row deletion-vector
+    predicate, so only rows that pass it pay the bitmap lookup (Catalyst's
+    CombineFilters evaluates the inner filter's conjuncts first). Partition
+    and nested columns are left to the caller's own logical filter. None
+    when no condition applies."""
+    from lakehouse_architecture_for_realestatedata_spark.sources.tables import (
+        ParquetTable,
+    )
+
+    l2p = {
+        lf.name: pf.name
+        for lf, pf in zip(snap.schema.fields, snap.physical_schema.fields)
+    }
+    parts = set(snap.physical_partition_columns)
+    phys = [
+        (l2p[c], op, v)
+        for c, op, v in conds or ()
+        if c in l2p and l2p[c] not in parts
+    ]
+    return ParquetTable._conds_filter(phys) if phys else None
+
+
 def _scan_files(
-    spark: SparkSession, path: str, snap: _Snapshot, active: dict[str, dict]
+    spark: SparkSession,
+    path: str,
+    snap: _Snapshot,
+    active: dict[str, dict],
+    where: list[tuple] | None = None,
 ) -> DataFrame:
     """Scan of exactly ``active`` (a subset of the snapshot's file set)
     under the snapshot's LOGICAL schema — partition-column restore,
     Hive-layout fast path, and column-mapping rename all included. The
     shared read engine under ``delta_read`` and the file-pruned
-    ``delta_merge`` / ``delta_delete_where`` rewrites."""
+    ``delta_merge`` / ``delta_delete_where`` rewrites.
+
+    ``where`` (``delta_read``'s conditions) is applied to the DV'd files'
+    parquet relation ahead of the deletion-vector predicate; it does NOT
+    replace the caller's filter (plain files and partition columns are
+    not filtered here)."""
     if snap.column_mapping == "id":
         # mode=id: bind parquet columns by field id, not name — Spark's
         # native resolution (SPARK-38094) keyed off the parquet.field.id
@@ -1622,15 +1656,21 @@ def _scan_files(
     if dv_files:
         # Reader protocol 3 deletionVectors: ALL DV'd files go through ONE
         # scan relation carrying (_metadata.file_path, _metadata.row_index)
-        # and ONE broadcast anti-join against the deleted (file, row) pairs
         # — never a per-file union, so 10⁴ DV'd files stay a single
-        # FileScan node. One file's small DV short-circuits to an isin
-        # literal (whole-stage-codegen'd, no join at all). The DV bitmaps
-        # themselves are log-metadata-scale (bounded by the descriptors'
-        # sizeInBytes), loaded driver-side exactly once per query. Files
-        # are keyed by BASENAME (UUID-named part files — unique by
-        # construction for both this writer and delta-spark); the URI
-        # spelling of _metadata.file_path is never reproduced driver-side.
+        # FileScan node. The deleted (file, row) marks apply as, by size:
+        # an isin literal (one file), literal per-file row-index arrays
+        # behind a basename map lookup (small multi-file sets), or a
+        # broadcast anti-join against the pair relation. The caller's
+        # ``where`` filters the relation FIRST: Catalyst combines the two
+        # filters with the inner one's conjuncts evaluated first, so a
+        # point read pays the per-row mark lookup only on the rows its own
+        # predicate keeps, not on every row of every DV'd file. The DV
+        # bitmaps themselves are log-metadata-scale (bounded by the
+        # descriptors' sizeInBytes), loaded driver-side exactly once per
+        # query. Files are keyed by BASENAME (UUID-named part files —
+        # unique by construction for both this writer and delta-spark);
+        # the URI spelling of _metadata.file_path is never reproduced
+        # driver-side.
         # No union against an empty relation when EVERY file carries a DV:
         # createDataFrame([], schema) is a defaultParallelism-partition
         # PYTHON RDD, so the union added ~32 empty Python-worker partition
@@ -1640,6 +1680,7 @@ def _scan_files(
         plain = {p: a for p, a in active.items() if p not in dv_files}
         out = _scan_files(spark, path, snap, plain) if plain else None
         types = {f.name: f.dataType for f in phys.fields}
+        first = _physical_conds_filter(snap, where)
         base_of = {p: unquote(p).rsplit("/", 1)[-1] for p in dv_files}
         total_marked = sum(
             int((a["deletionVector"] or {}).get("cardinality") or 0)
@@ -1661,6 +1702,8 @@ def _scan_files(
                     _abs_data_path(path, p)
                 )
                 one = one.withColumn("__ri", F.col("_metadata.row_index"))
+                if first is not None:
+                    one = one.filter(first)
                 if len(deleted) <= _DV_ISIN_CAP:
                     one = one.filter(~F.col("__ri").isin(deleted))
                 else:
@@ -1685,6 +1728,8 @@ def _scan_files(
             ).alias("__fb"),
             F.col("_metadata.row_index").alias("__ri"),
         )
+        if first is not None:
+            df = df.filter(first)
         if len(dv_files) == 1:
             ((p, add),) = dv_files.items()
             deleted = _load_deletion_vector(path, add["deletionVector"])
@@ -3752,7 +3797,7 @@ def delta_optimize(
     return version
 
 
-_KEY_PRUNE_CAP = 100_000  # collected distinct merge keys; beyond → envelope
+_KEY_PRUNE_CAP = 100_000  # collected merge-key rows; beyond → envelope
 
 
 def _files_overlapping_keys(
@@ -3761,12 +3806,15 @@ def _files_overlapping_keys(
     """Active files whose stats/partitionValues may hold a source key —
     the files a keyed MERGE must read and rewrite (the ``tables.py``
     ``_dirs_overlapping_keys`` policy at Delta file granularity).
-    Single-key merges collect the distinct source keys (capped
-    driver-side — merge sources are the small side by construction) and
+    Single-key merges collect the source keys (capped driver-side —
+    merge sources are the small side by construction — and deduplicated
+    there, so the collect is a plain limited scan with no shuffle) and
     bisect each file's [min, max] against the actual key set, so an
     upsert of {day-1 keys, one far-away fresh key} does not smear into an
-    envelope covering the whole table. Multi-key or over-cap sources fall
-    back to the per-column min/max envelope (conservative, still exact).
+    envelope covering the whole table. Multi-key sources, and sources
+    with more key ROWS than the cap (duplicates included — the keys past
+    the limit were never seen), fall back to the per-column min/max
+    envelope (conservative, still exact).
     NULL keys never equi-join → all-NULL files and NULL source keys are
     ignored; files without stats must be assumed overlapping."""
     import bisect
@@ -3793,23 +3841,22 @@ def _files_overlapping_keys(
         rows = (
             source.select(k)
             .where(F.col(k).isNotNull())
-            .distinct()
             .limit(_KEY_PRUNE_CAP + 1)
             .collect()
         )
-        vals = sorted(r[0] for r in rows)
-        if not vals:
+        if not rows:
             return []  # no non-null source key → pure insert
-        if len(vals) <= _KEY_PRUNE_CAP and not isinstance(vals[0], bool):
-            cvals = sorted(ParquetTable._coerce(v, vals[0]) for v in vals)
+        like = rows[0][0]
+        if len(rows) <= _KEY_PRUNE_CAP and not isinstance(like, bool):
+            cvals = sorted({ParquetTable._coerce(r[0], like) for r in rows})
             out = []
             for p, add in snap.files.items():
                 b = bounds(add, pc)
                 if b is None:
                     out.append(p)  # no stats → must assume overlap
                     continue
-                lo = ParquetTable._coerce(b[0], vals[0])
-                hi = ParquetTable._coerce(b[1], vals[0])
+                lo = ParquetTable._coerce(b[0], like)
+                hi = ParquetTable._coerce(b[1], like)
                 if lo is None and hi is None:
                     continue  # all-NULL file: equi-join can't match
                 if lo is None or hi is None:
@@ -4084,6 +4131,8 @@ def _scan_with_rowpos(
     snap: _Snapshot,
     files: dict[str, dict],
     with_row_ids: bool = False,
+    where: list[tuple] | None = None,
+    old_dvs: bool = True,
 ) -> DataFrame:
     """Logical-named scan of exactly ``files`` carrying ``__fb`` (file
     basename) and ``__ri`` (parquet row index), with any EXISTING deletion
@@ -4093,7 +4142,15 @@ def _scan_with_rowpos(
     ``with_row_ids`` (row-tracked tables, every file stamped) adds a
     ``__rowid`` column — the protocol's coalesce(materialized,
     baseRowId + row_index) — so DV UPDATE/MERGE can PRESERVE matched
-    rows' ids by materializing them into the new image files."""
+    rows' ids by materializing them into the new image files.
+
+    ``where`` (the operation's own conditions) filters the relation ahead
+    of the existing-DV predicate, as in ``_scan_files``; the caller still
+    applies its full filter. ``old_dvs=False`` skips the existing marks
+    altogether: a frame that only yields candidate POSITIONS for
+    ``_dv_mark_actions`` (which subtracts each file's old bitmap) never
+    needs them, while every frame that carries row IMAGES (CDF, row ids,
+    post-images, anti-joins) must keep them."""
     from pyspark.sql.types import LongType
 
     phys = snap.physical_schema
@@ -4112,7 +4169,12 @@ def _scan_with_rowpos(
         ),
         F.col("_metadata.row_index").alias("__ri"),
     )
-    dv_files = {p: a for p, a in files.items() if a.get("deletionVector")}
+    dv_files = {
+        p: a for p, a in files.items() if old_dvs and a.get("deletionVector")
+    }
+    first = _physical_conds_filter(snap, where) if dv_files else None
+    if first is not None:
+        df = df.filter(first)
     total_marked = sum(
         int((a["deletionVector"] or {}).get("cardinality") or 0)
         for a in dv_files.values()
@@ -4196,26 +4258,34 @@ def _dv_mark_actions(
     touched: list[str],
     by_file: dict[str, list[int]],
     now: int,
-) -> list[dict]:
-    """remove+add action pairs marking ``by_file`` (basename → row
-    indexes) deleted via fresh per-file deletion vectors, UNIONED with
-    each file's existing DV (DVs are absolute per file version).
-    Basenames resolve against the TOUCHED files only — resolving against
-    the whole snapshot could attach a DV to an untouched file that
+) -> tuple[list[dict], int]:
+    """remove+add action pairs marking ``by_file`` (basename → candidate
+    row indexes) deleted via fresh per-file deletion vectors, UNIONED with
+    each file's existing DV (DVs are absolute per file version), plus the
+    number of rows newly marked. Candidates may include rows the old DV
+    already deletes (position scans skip the old-DV filter): those are
+    subtracted here, so the count — the commit's matched/deleted metric —
+    is live rows only, and a file whose candidates were all dead gets no
+    new DV. Basenames resolve against the TOUCHED files only — resolving
+    against the whole snapshot could attach a DV to an untouched file that
     happens to share a basename (``_dv_write_path_ok`` only checks
     uniqueness among the touched set)."""
     fb_to_rel = {unquote(p).rsplit("/", 1)[-1]: p for p in touched}
     actions: list[dict] = []
+    marked = 0
     for fb in sorted(by_file):
         rel = fb_to_rel[fb]
         add = snap.files[rel]
-        old = (
+        old = set(
             _load_deletion_vector(path, add["deletionVector"])
             if add.get("deletionVector")
-            else []
+            else ()
         )
-        union = sorted(set(old) | set(by_file[fb]))
-        desc = _write_dv_file(path, union)
+        fresh = set(by_file[fb]) - old
+        if not fresh:
+            continue
+        marked += len(fresh)
+        desc = _write_dv_file(path, sorted(old | fresh))
         actions.append(
             {
                 "remove": _carry_row_ids(
@@ -4239,7 +4309,7 @@ def _dv_mark_actions(
                 }
             }
         )
-    return actions
+    return actions, marked
 
 
 #: Per-file matched-row ceiling for WRITING a deletion vector (aligned with
@@ -4297,49 +4367,41 @@ def _files_row_bound(path: str, files: dict[str, dict]) -> tuple[int, int]:
 
 
 def _collect_dv_marks(
-    matched: DataFrame, row_bound: tuple[int, int] | None = None
+    matched: DataFrame, row_bound: tuple[int, int]
 ) -> dict[str, list[int]] | None:
     """Collect the matched rows' (file basename, row index) positions for
-    DV marking, GUARDED: a per-file count aggregate (one row per touched
-    file) runs first, and if any file's matched count exceeds
-    ``_DV_WRITE_FILE_CAP`` or the total exceeds ``_DV_WRITE_TOTAL_CAP``
-    the collect never happens — returns None and the caller falls back to
-    the rewrite path (where matched rows are that dense, rewriting is the
-    cheaper physics anyway, and the driver never holds an unbounded
-    position list). Returns {} when nothing matched.
+    DV marking ({} when nothing matched), GUARDED by the write budget:
+    where matched rows are dense, rewriting is the cheaper physics and the
+    driver must not hold an unbounded position list, so None sends the
+    caller to the rewrite path.
 
     ``row_bound`` = (max rows in any touched file, total rows across the
-    touched files), when the caller already knows it from the add
-    actions' stats. Matched counts can never exceed the files' row
-    counts, so bounds inside the caps PROVE the probe redundant — the
-    positions collect becomes the only job (one scan, no persist) instead
-    of a persist + probe + collect pair of jobs (r15, guide §2.4 via
-    metadata the driver already holds). The probe path stays for
-    unbounded/unknown inputs — the 100 TB safety rail is unchanged."""
-    if row_bound is not None and (
-        row_bound[0] <= _DV_WRITE_FILE_CAP
-        and row_bound[1] <= _DV_WRITE_TOTAL_CAP
-    ):
+    touched files), from the add actions' stats (``_files_row_bound``).
+    Every caller's ``matched`` emits each physical row of the touched
+    files at most once — a filter, or a ``left_semi`` join — so bounds
+    inside ``_DV_WRITE_FILE_CAP`` / ``_DV_WRITE_TOTAL_CAP`` PROVE the
+    budget holds and the positions collect is the only job. Only when the
+    files are too large to prove it does a per-file count probe (over a
+    persisted ``matched``) run before the collect."""
+    def positions(df: DataFrame) -> dict[str, list[int]]:
         by_file: dict[str, list[int]] = {}
-        for r in matched.select("__fb", "__ri").collect():
+        for r in df.select("__fb", "__ri").collect():
             by_file.setdefault(r["__fb"], []).append(int(r["__ri"]))
         return by_file
+
+    if row_bound[0] <= _DV_WRITE_FILE_CAP and row_bound[1] <= _DV_WRITE_TOTAL_CAP:
+        return positions(matched)
     matched = matched.persist()
     try:
         counts = (
             matched.groupBy("__fb").agg(F.count(F.lit(1)).alias("__n")).collect()
         )
-        if not counts:
-            return {}
         if (
-            max(int(r["__n"]) for r in counts) > _DV_WRITE_FILE_CAP
+            max((int(r["__n"]) for r in counts), default=0) > _DV_WRITE_FILE_CAP
             or sum(int(r["__n"]) for r in counts) > _DV_WRITE_TOTAL_CAP
         ):
             return None
-        by_file: dict[str, list[int]] = {}
-        for r in matched.select("__fb", "__ri").collect():
-            by_file.setdefault(r["__fb"], []).append(int(r["__ri"]))
-        return by_file
+        return positions(matched) if counts else {}
     finally:
         matched.unpersist()
 
@@ -4365,22 +4427,27 @@ def _delete_with_dvs(
     )
 
     files = {p: snap.files[p] for p in touched}
-    scan = _scan_with_rowpos(spark, path, snap, files)
     cond = ParquetTable._conds_filter(list(conds))
-    matched = scan.filter(cond)
-    # matched ⊆ the touched files' rows (a pure filter), so the files'
-    # numRecords — already on the driver via stats — bound the probe
-    by_file = _collect_dv_marks(matched, row_bound=_files_row_bound(path, files))
+    # candidate positions straight off the files — old marks are subtracted
+    # by _dv_mark_actions, never evaluated per row; a pure filter, so the
+    # files' numRecords (already on the driver via stats) bound it
+    candidates = _scan_with_rowpos(spark, path, snap, files, old_dvs=False)
+    by_file = _collect_dv_marks(
+        candidates.filter(cond), _files_row_bound(path, files)
+    )
     if by_file is None:
         return None  # over budget: fall back to the rewrite path
-    if not by_file:
-        return latest  # stats admitted the files, but no row matches
+    now = int(time.time() * 1000)
+    marks, n_deleted = _dv_mark_actions(path, snap, touched, by_file, now)
+    if not n_deleted:
+        return latest  # stats admitted the files, but no live row matches
     cdcs = (
         _write_cdc_files(
             _to_physical_frame(
-                matched.drop("__fb", "__ri").withColumn(
-                    "_change_type", F.lit("delete")
-                ),
+                _scan_with_rowpos(spark, path, snap, files, where=conds)
+                .filter(cond)
+                .drop("__fb", "__ri")
+                .withColumn("_change_type", F.lit("delete")),
                 snap.column_mapping,
                 snap.schema,
             ),
@@ -4389,7 +4456,6 @@ def _delete_with_dvs(
         if _cdf_enabled(snap)
         else []
     )
-    now = int(time.time() * 1000)
     ci: dict[str, Any] = {
         "timestamp": now,
         "operation": "DELETE",
@@ -4397,16 +4463,15 @@ def _delete_with_dvs(
             "predicate": " AND ".join(f"{c} {o} {v!r}" for c, o, v in conds)
         },
         "operationMetrics": _op_metrics(
-            numDeletedRows=sum(len(v) for v in by_file.values()),
-            numDeletionVectorsAdded=len(by_file),
+            numDeletedRows=n_deleted,
+            numDeletionVectorsAdded=len(marks) // 2,
         ),
         "engineInfo": "delta-lite",
     }
     ict = _ict_for_commit(path, snap.configuration, latest, now)
     if ict is not None:
         ci["inCommitTimestamp"] = ict
-    actions: list[dict] = [{"commitInfo": ci}]
-    actions += _dv_mark_actions(path, snap, touched, by_file, now)
+    actions: list[dict] = [{"commitInfo": ci}, *marks]
     actions += [{"cdc": c} for c in cdcs]
     payload = (
         "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
@@ -4439,11 +4504,16 @@ def _update_with_dvs(
     tracked = _row_tracking_enabled(snap)
     if tracked:
         _require_stamped(files, path, "UPDATE")
-    scan = _scan_with_rowpos(spark, path, snap, files, with_row_ids=tracked)
+    # one LIVE frame for both the positions and the post-images (the
+    # images must not resurrect old-DV'd rows); the conditions run ahead
+    # of the old-mark lookup, so only matching rows pay it
+    scan = _scan_with_rowpos(
+        spark, path, snap, files, with_row_ids=tracked, where=conds
+    )
     cond = ParquetTable._conds_filter(list(conds))
     matched = scan.filter(cond)
     # matched ⊆ the touched files' rows (a pure filter) — see _delete_with_dvs
-    by_file = _collect_dv_marks(matched, row_bound=_files_row_bound(path, files))
+    by_file = _collect_dv_marks(matched, _files_row_bound(path, files))
     if by_file is None:
         return None  # over budget: fall back to the rewrite path
     if not by_file:
@@ -4490,6 +4560,7 @@ def _update_with_dvs(
         else []
     )
     now = int(time.time() * 1000)
+    marks, n_updated = _dv_mark_actions(path, snap, touched, by_file, now)
     ci: dict[str, Any] = {
         "timestamp": now,
         "operation": "UPDATE",
@@ -4498,16 +4569,15 @@ def _update_with_dvs(
         },
         "operationMetrics": _op_metrics(
             adds,
-            numUpdatedRows=sum(len(v) for v in by_file.values()),
-            numDeletionVectorsAdded=len(by_file),
+            numUpdatedRows=n_updated,
+            numDeletionVectorsAdded=len(marks) // 2,
         ),
         "engineInfo": "delta-lite",
     }
     ict = _ict_for_commit(path, snap.configuration, latest, now)
     if ict is not None:
         ci["inCommitTimestamp"] = ict
-    actions: list[dict] = [{"commitInfo": ci}]
-    actions += _dv_mark_actions(path, snap, touched, by_file, now)
+    actions: list[dict] = [{"commitInfo": ci}, *marks]
     # row tracking: updated rows KEEP their ids (materialized above);
     # the new file still needs a fresh baseRowId range per spec — the
     # materialized values shadow it on read. Untouched rows keep theirs
@@ -4559,8 +4629,21 @@ def _merge_with_dvs(
             scan = scan.withColumn("__rowid", F.lit(None).cast("bigint"))
     target = scan.drop("__fb", "__ri", "__rowid")
     changes = None
+    by_file: dict[str, list[int]] | None = {}
     if when_matched == "update_all":
+        # ``matched`` carries row IMAGES (CDF pre-images, row ids) and so
+        # reads through the old DVs; the positions to mark come off the raw
+        # files instead — _dv_mark_actions subtracts the old marks. A
+        # left_semi emits each target row at most once, so the files'
+        # numRecords bound the collect: one job, no persist or count probe.
         matched = scan.join(source.select(*keys), on=keys, how="left_semi")
+        if files:
+            by_file = _collect_dv_marks(
+                _scan_with_rowpos(spark, path, snap, files, old_dvs=False).join(
+                    source.select(*keys), on=keys, how="left_semi"
+                ),
+                _files_row_bound(path, files),
+            )
         new_rows = source
         if _cdf_enabled(snap):
             pre = matched.drop("__fb", "__ri", "__rowid")
@@ -4577,14 +4660,12 @@ def _merge_with_dvs(
                     allowMissingColumns=True,
                 )
             )
-    elif when_matched == "keep_target":  # insert-only merge
-        matched = scan.limit(0)
+    elif when_matched == "keep_target":  # insert-only merge: marks nothing
         new_rows = source.join(target.select(*keys), on=keys, how="left_anti")
         if _cdf_enabled(snap):
             changes = new_rows.withColumn("_change_type", F.lit("insert"))
     else:
         raise ValueError(f"unknown when_matched={when_matched!r}")
-    by_file = _collect_dv_marks(matched)
     if by_file is None:
         return None  # over budget: fall back to the rewrite path
     # schema widening — identical contract to the rewrite merge
@@ -4660,6 +4741,7 @@ def _merge_with_dvs(
         else []
     )
     now = int(time.time() * 1000)
+    marks, n_matched = _dv_mark_actions(path, snap, touched, by_file, now)
     ci: dict[str, Any] = {
         "timestamp": now,
         "operation": "MERGE",
@@ -4669,8 +4751,8 @@ def _merge_with_dvs(
         },
         "operationMetrics": _op_metrics(
             adds,
-            numTargetRowsMatched=sum(len(v) for v in by_file.values()),
-            numDeletionVectorsAdded=len(by_file),
+            numTargetRowsMatched=n_matched,
+            numDeletionVectorsAdded=len(marks) // 2,
         ),
         "engineInfo": "delta-lite",
     }
@@ -4694,7 +4776,7 @@ def _merge_with_dvs(
                 }
             }
         )
-    actions += _dv_mark_actions(path, snap, touched, by_file, now)
+    actions += marks
     # row tracking: matched images keep their ids (materialized above),
     # inserts take the new file's fresh baseRowId range; carried files'
     # re-adds keep their original baseRowId (untouched rows' ids stable)

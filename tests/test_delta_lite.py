@@ -2447,6 +2447,214 @@ def test_dv_merge_and_update_mark_and_append(spark, tmp_path):
     assert final.filter("tag IS NULL").count() == 21
 
 
+def test_dv_ops_never_remark_or_resurrect_old_marks(spark, tmp_path):
+    """DV DELETE and MERGE collect candidate positions without the old-DV
+    filter and subtract the old marks driver-side; the row images (CDF,
+    row ids, post-images, keep_target's anti-join) still read through
+    them. Every op here hits an already-deleted key AND a live key of the
+    same file: the dead row must stay gone, the metrics must count live
+    rows only, CDF must carry no image of it, and no row may take its
+    row id."""
+    from lakehouse_architecture_for_realestatedata_spark.sources import (
+        delta_lite as dl,
+    )
+
+    t = str(tmp_path / "dvdead")
+    delta_write(
+        spark.range(0, 20).select("id", (F.col("id") * 10).alias("v")).coalesce(1),
+        t,
+    )
+    (orig,) = dl._replay(t, None).files
+    dl.delta_enable_row_tracking(spark, t)
+    dl.delta_enable_dvs(spark, t)
+    dl.delta_enable_cdf(spark, t)
+    first_ids = {
+        r["id"]: r["_row_id"]
+        for r in delta_read(spark, t, with_row_ids=True).collect()
+    }
+
+    def metrics(v):
+        (ci,) = [h for h in delta_history(t) if h["version"] == v]
+        return ci["operationMetrics"]
+
+    def changes(v):
+        return sorted(
+            (r["_change_type"], r["id"], r["v"])
+            for r in dl.delta_read_changes(spark, t, v, v).collect()
+        )
+
+    def card():
+        return dl._replay(t, None).files[orig]["deletionVector"]["cardinality"]
+
+    dl.delta_delete_where(spark, t, ("id", "between", (3, 4)))
+    # DELETE over dead {3, 4} + live {2}
+    v = dl.delta_delete_where(spark, t, ("id", "between", (2, 4)))
+    assert metrics(v)["numDeletedRows"] == "1"
+    assert changes(v) == [("delete", 2, 20)]
+    assert card() == 3
+    # MERGE update_all: dead 3 is inserted afresh, live 5 is updated
+    v = dl.delta_merge(
+        spark.createDataFrame([(3, -3), (5, -5)], "id bigint, v bigint"), t, key="id"
+    )
+    assert metrics(v)["numTargetRowsMatched"] == "1"
+    assert changes(v) == [
+        ("insert", 3, -3),
+        ("update_postimage", 5, -5),
+        ("update_preimage", 5, 50),
+    ]
+    assert card() == 4
+    # MERGE keep_target: dead 4 is inserted, live 6 keeps its target row
+    v = dl.delta_merge(
+        spark.createDataFrame([(4, 44), (6, 0)], "id bigint, v bigint"),
+        t,
+        key="id",
+        when_matched="keep_target",
+    )
+    assert changes(v) == [("insert", 4, 44)]
+    assert card() == 4
+    # UPDATE over dead {2} + live {1}
+    v = dl.delta_update_where(
+        spark, t, {"v": F.lit(999).cast("bigint")}, ("id", "between", (1, 2))
+    )
+    assert metrics(v)["numUpdatedRows"] == "1"
+    assert changes(v) == [("update_postimage", 1, 999), ("update_preimage", 1, 10)]
+    assert card() == 5
+
+    rows = delta_read(spark, t, with_row_ids=True).collect()
+    got = {r["id"]: r["v"] for r in rows}
+    want = {i: i * 10 for i in range(20) if i != 2}
+    want.update({1: 999, 3: -3, 4: 44, 5: -5})
+    assert got == want and len(rows) == len(want)
+    ids = {r["id"]: r["_row_id"] for r in rows}
+    assert len(set(ids.values())) == len(ids)
+    # survivors of the original file and updated images keep their ids;
+    # re-inserted keys never take a dead row's id
+    for k in (0, 1, 5, 6, 19):
+        assert ids[k] == first_ids[k]
+    assert not {first_ids[k] for k in (2, 3, 4)} & set(ids.values())
+
+
+def test_merge_key_cap_falls_back_to_envelope(spark, tmp_path, monkeypatch):
+    """Over _KEY_PRUNE_CAP collected key ROWS the single-key MERGE prunes
+    by the source's [min, max] envelope instead of the exact key set —
+    counted before the driver-side dedup, so keys past the limit are
+    never silently dropped — and the upsert stays exact."""
+    from lakehouse_architecture_for_realestatedata_spark.sources import (
+        delta_lite as dl,
+    )
+
+    t = str(tmp_path / "keycap")
+    for lo in range(0, 500, 100):
+        delta_write(
+            spark.range(lo, lo + 100)
+            .select("id", (F.col("id") * 2).alias("v"))
+            .coalesce(1),
+            t,
+            mode="append",
+        )
+    snap = dl._replay(t, None)
+    by_lo = {
+        json.loads(a["stats"])["minValues"]["id"] // 100: p
+        for p, a in snap.files.items()
+    }
+    keys = [105, 107, 310, 312, 314]
+    src = spark.createDataFrame([(k, -k) for k in keys], "id bigint, v bigint")
+    exact = {by_lo[1], by_lo[3]}
+    envelope = {by_lo[1], by_lo[2], by_lo[3]}
+    assert set(dl._files_overlapping_keys(snap, ["id"], src)) == exact
+    monkeypatch.setattr(dl, "_KEY_PRUNE_CAP", 4)
+    assert set(dl._files_overlapping_keys(snap, ["id"], src)) == envelope
+    # 5 rows but 2 distinct keys: still over the cap of collected rows
+    dups = spark.createDataFrame(
+        [(k,) for k in (105, 105, 105, 310, 310)], "id bigint"
+    )
+    assert set(dl._files_overlapping_keys(snap, ["id"], dups)) == envelope
+
+    v = dl.delta_merge(src, t, key="id")
+    removed = {
+        json.loads(line)["remove"]["path"]
+        for line in open(os.path.join(t, "_delta_log", f"{v:020d}.json"))
+        if '"remove"' in line
+    }
+    assert removed == envelope
+    want = {i: i * 2 for i in range(500)}
+    want.update({k: -k for k in keys})
+    got = {r["id"]: r["v"] for r in delta_read(spark, t).collect()}
+    assert got == want
+
+
+def _dv_multi_file_table(spark, t):
+    """40 rows over 4 files, every file carrying a deletion vector."""
+    from lakehouse_architecture_for_realestatedata_spark.sources import (
+        delta_lite as dl,
+    )
+
+    delta_write(
+        spark.range(0, 40)
+        .select("id", (F.col("id") * 10).alias("v"))
+        .repartition(4, "id"),
+        t,
+    )
+    dl.delta_enable_dvs(spark, t)
+    dl.delta_delete_where(spark, t, ("id", "<", 8))
+    dl.delta_delete_where(spark, t, ("id", ">", 36))
+    assert len(dl._replay(t, None).files) == 4
+    assert all(a.get("deletionVector") for a in dl._replay(t, None).files.values())
+    return dl
+
+
+def test_dv_read_filters_before_the_dv_predicate(spark, tmp_path):
+    """delta_read's own ``where`` is applied to the DV'd parquet relation
+    ahead of the per-row old-DV lookup: the optimized plan's Filter lists
+    the ``where`` conjunct before the DV map lookup, so only rows it keeps
+    pay the lookup."""
+    import re
+
+    t = str(tmp_path / "dvorder")
+    dl = _dv_multi_file_table(spark, t)
+    df = dl.delta_read(spark, t, where=[("id", "=", 20)])
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    (line,) = [ln for ln in plan.splitlines() if "array_contains" in ln]
+    assert "Filter" in line
+    where_at = re.search(r"\(id#\d+L = 20\)", line).start()
+    assert where_at < line.index("array_contains")
+    assert [tuple(r) for r in df.collect()] == [(20, 200)]
+
+
+def test_dv_merge_jobs_and_no_persist(spark, tmp_path, monkeypatch):
+    """A DV MERGE over files whose numRecords prove the write budget runs
+    one key collect, the positions collect (plus its broadcast of the
+    source keys) and the data write — no persist, no per-file count
+    probe, no second collect."""
+    t = str(tmp_path / "dvjobs")
+    dl = _dv_multi_file_table(spark, t)
+    src_path = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(10, -1), (21, -2), (100, 7)], "id bigint, v bigint"
+    ).coalesce(1).write.parquet(src_path)
+    src = spark.read.parquet(src_path)
+    persisted = []
+    monkeypatch.setattr(  # the concrete (classic) DataFrame class
+        type(src), "persist", lambda self, *a, **k: persisted.append(self) or self
+    )
+    sc = spark.sparkContext
+    rdds_before = sc._jsc.getPersistentRDDs().size()
+    group = f"dv-merge-{os.getpid()}-{id(src)}"
+    sc.setJobGroup(group, "dv merge")
+    try:
+        v = dl.delta_merge(src, t, key="id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert persisted == []
+    assert sc._jsc.getPersistentRDDs().size() == rdds_before
+    assert len(jobs) == 4
+    (ci,) = [h for h in delta_history(t) if h["version"] == v]
+    assert ci["operationMetrics"]["numTargetRowsMatched"] == "2"
+    got = {r["id"]: r["v"] for r in delta_read(spark, t).collect()}
+    assert got[10] == -1 and got[21] == -2 and got[100] == 7 and len(got) == 30
+
+
 def test_optimize_purges_dvs_and_vacuum_collects_bins(spark, tmp_path):
     """REORG/PURGE economics: OPTIMIZE on a DV table materializes through
     the bitmaps (deleted rows gone from the compacted files, no DV on the
